@@ -179,7 +179,7 @@ def main() -> None:
     # stime:utime 10:1).  A committed-and-pre-touched heap floor faults its
     # pages ONCE, in parallel, at session init (untimed) and never returns
     # them, so per-query numbers stay page-fault-free.  -Xmx is unchanged
-    # (SPARK_DRIVER_MEMORY, default 64g): above the floor the heap can
+    # (SPARK_DRIVER_MEMORY, default 40% of physical memory): above the floor the heap can
     # still grow, and AlwaysPreTouch covers those commits too.  Floor size
     # is env-tunable; empty SPARK_GRAFT_XMS disables the whole thing.
     # Default is a FIXED heap (Xmx pinned to the same size unless the

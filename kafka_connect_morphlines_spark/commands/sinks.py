@@ -9,11 +9,15 @@ runner executes the pipeline in batch mode, perform the write via the
 DataFrame writer (Kafka) or ``foreachPartition`` bulk HTTP (Solr-shaped).
 
 Transports:
-- ``kafka``  — spark-sql-kafka writer (jar required; raises otherwise)
-- ``files``  — JSON files to a directory (test/dev transport)
+- ``kafka``  — sources.kafka.write_kafka_batch, the one Kafka transport:
+               the spark-sql-kafka connector, or without the jar the
+               embedded broker once sources.embedded_broker.install(spark)
+               ran (KafkaUnavailableError when neither is there)
+- ``rest``   — Confluent REST-proxy publish
 - ``memory`` — collect into a registered in-process buffer (unit tests; the
                analog of the reference's mocked SolrClient,
                MorphlineSinkTaskTest.java:59-76)
+- ``noop``   — publish nothing
 """
 
 from __future__ import annotations
@@ -27,14 +31,8 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from kafka_connect_morphlines_spark import record as R
 from kafka_connect_morphlines_spark.commands import command
 from kafka_connect_morphlines_spark.pipeline import PipelineSpecError
+from kafka_connect_morphlines_spark.sources.kafka import write_kafka_batch
 from kafka_connect_morphlines_spark.templates import colref, template_to_column
-
-def _kafka_format() -> str:
-    """The session's kafka provider name — the real connector, or the
-    embedded broker when sources.embedded_broker.install() switched it."""
-    from kafka_connect_morphlines_spark.sources import kafka as kafka_mod  # noqa: PLC0415
-
-    return kafka_mod.KAFKA_FORMAT
 
 
 # In-process sink buffers for tests (name -> list of row dicts), mirroring the
@@ -187,15 +185,8 @@ def kafka_producer(config, ctx):
     def transform(df: DataFrame) -> DataFrame:
         out = _value_columns(df, config)
         if transport == "kafka":
-            writer = out.write.format(_kafka_format()).mode("append")
-            bootstrap = config.get("properties", {}).get("bootstrap-servers") or config.get("properties", {}).get("bootstrap.servers")
-            if bootstrap:
-                writer = writer.option("kafka.bootstrap.servers", str(bootstrap))
-            for k, v in config.get("properties", {}).items():
-                writer = writer.option("kafka." + str(k).replace("-", "."), str(v))
-            writer.save()
-        elif transport == "files":
-            out.write.mode(config.get("mode", "append")).json(config["path"])
+            options = {"kafka." + str(k).replace("-", "."): str(v) for k, v in config.get("properties", {}).items()}
+            write_kafka_batch(out, options.pop("kafka.bootstrap.servers", None), options=options)
         elif transport == "rest":
             # Confluent REST-proxy publish (reference
             # KafkaDataProducerCommandBuilder.java:333-374): POST

@@ -631,6 +631,16 @@ def session_window_agg(spark, sf_dir):
     )
 
 
+def new_session(w) -> Column:
+    """1 where an event opens a session in window ``w`` (ordered by ``ts``):
+    the first event, or one more than 30 minutes after the previous.  The
+    gap is compared in microseconds like the oracles'
+    ``ts - lag(ts) > INTERVAL 30 MINUTE``; whole-second casts would fold a
+    1800.43 s gap into one session."""
+    gap = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
+    return F.when(gap.isNull() | (gap > 30 * 60 * 10**6), F.lit(1)).otherwise(F.lit(0))
+
+
 @query(
     "sessionize",
     """
@@ -654,13 +664,7 @@ def sessionize(spark, sf_dir):
 
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ev = t(spark, sf_dir, "events")
-    gap = F.col("ts").cast("long") - F.lag(F.col("ts")).over(w).cast("long")
-    with_new = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(gap.isNull() | (gap > 30 * 60), F.lit(1)).otherwise(F.lit(0)).alias("is_new"),
-    )
+    with_new = ev.select("user_id", "ts", "event_id", new_session(w).alias("is_new"))
     wsum = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(Window.unboundedPreceding, 0)
     return (
         with_new.select("user_id", F.sum("is_new").over(wsum).alias("session_id"))
@@ -6284,11 +6288,7 @@ def session_duration_stats(spark, sf_dir):
 
     ev = t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.col("ts").cast("long") - F.lag(F.col("ts")).over(w).cast("long")
-    marked = ev.select(
-        "user_id", "ts", "value", "event_id",
-        F.when(gap.isNull() | (gap > 30 * 60), F.lit(1)).otherwise(F.lit(0)).alias("is_new"),
-    )
+    marked = ev.select("user_id", "ts", "value", "event_id", new_session(w).alias("is_new"))
     wsum = w.rowsBetween(Window.unboundedPreceding, 0)
     sess = marked.select(
         "user_id", "ts", "value", F.sum("is_new").over(wsum).alias("sid")

@@ -12,6 +12,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """40% of physical memory in whole GB (at least 1g): room for the
+    Python workers and the JVM's off-heap next to the heap, where a fixed
+    large heap lets the driver outgrow the host before it collects."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, int(total * 0.4) >> 30)}g"
+
+
 def get_spark(
     app_name: str = "kafka_connect_morphlines_spark",
     master: str | None = None,
@@ -51,7 +59,7 @@ def get_spark(
         # keep the 3.5 behavior: read them as TIMESTAMP.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "64g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # RocksDB state store: required by transformWithState and the right

@@ -1,14 +1,14 @@
-"""Embedded file-backed Kafka broker as a Python DataSource named ``kafka``.
+"""Embedded file-backed Kafka broker as a Python DataSource.
 
-The reference's primary transport is a real Kafka consumer/producer
+The reference's one transport is a real Kafka consumer/producer
 (MorphlineSinkTask.java:129-149, KafkaDataProducerCommandBuilder.java:251-331).
-This engine's native path is Spark's ``format("kafka")`` connector — a
-separate jar not bundled with pip Spark.  This module makes that path
-*executable without the jar or a broker*: a Spark 4 Python DataSource
-(pyspark.sql.datasource) registered under the name ``kafka``, so
+The engine's is Spark's ``format("kafka")`` connector behind sources.kafka —
+a separate jar not bundled with pip Spark.  This module is the one jar-less
+stand-in: a Spark 4 Python DataSource (pyspark.sql.datasource) that
+``install(spark)`` puts behind sources.kafka's format seam, so
 ``read_kafka_batch/stream``, ``write_kafka_batch`` and ``kafkaProducer
-{transport: kafka}`` run their REAL reader/writer code — the same
-``.format("kafka").option(...)`` plumbing — against an embedded broker.
+{transport: kafka}`` run their REAL ``.format(...).options(...)`` reader and
+writer code against a local log directory.
 
 Semantics (the subset the engine's call sites use):
 - ``kafka.bootstrap.servers`` names the broker: a local log directory.
@@ -18,18 +18,19 @@ Semantics (the subset the engine's call sites use):
 - read: ``subscribe`` = comma-separated topics; emits the exact kafka-source
   schema (key/value binary, topic, partition, offset, timestamp,
   timestampType) that record.from_kafka_source renames to the envelope.
-- streaming read: offsets are per-(topic,partition) record counts, exactly
-  Kafka's offset model; micro-batches cover (start, end] slices.
+- offsets are per-(topic,partition) record counts, exactly Kafka's offset
+  model.  One slice reader serves both faces: a micro-batch reads the
+  ``[start, end)`` slice between two offsets, a batch scan the slice from
+  earliest to latest.
 
 Registration is explicit (``install(spark)``) — on a cluster with the real
 spark-sql-kafka jar you simply don't install this, and the same pipeline
-specs run against real brokers.  Lookup falls through to Python data sources
-only when no JVM source claims the name, so installing is also safe-by-noop
-there.
+specs run against real brokers.
 
 Log layout: ``<dir>/<topic>/p<partition>/<monotonic-name>.jsonl`` with one
-base64 (key, value, ts) record per line; offsets are record positions in
-filename order — files are the commit unit, append-only, no rewrites.
+base64 (key, value, ts) record per non-blank line; offsets are record
+positions in filename order.  Files are the commit unit: written as
+``.<name>.tmp`` and renamed into place, append-only, never rewritten.
 """
 
 from __future__ import annotations
@@ -60,7 +61,7 @@ KAFKA_SCHEMA = (
 
 
 def _log_dir(options: dict) -> str:
-    d = options.get("kafka.bootstrap.servers") or options.get("path")
+    d = options.get("kafka.bootstrap.servers")
     if not d:
         raise ValueError("embedded kafka broker: kafka.bootstrap.servers must name the log directory")
     return d
@@ -81,17 +82,21 @@ def _partition_dirs(root: str, topics: list[str] | None) -> list[tuple[str, int,
     return out
 
 
-def _read_partition(pdir: str) -> list[dict]:
-    """All records of one partition in offset order (filename order)."""
-    records: list[dict] = []
-    for fname in sorted(os.listdir(pdir)):
-        if not fname.endswith(".jsonl"):
-            continue
-        with open(os.path.join(pdir, fname), encoding="utf-8") as fh:
-            for line in fh:
-                if line.strip():
-                    records.append(json.loads(line))
-    return records
+def _records(fh) -> Iterator[bytes]:
+    """The record lines of one log file: every non-blank line."""
+    return (line for line in fh if line.strip())
+
+
+def _log_files(pdir: str) -> list[tuple[str, int]]:
+    """[(path, records)] of one partition's committed files in offset
+    order; a file still being written (``.<name>.tmp``) is not listed."""
+    out = []
+    for name in sorted(os.listdir(pdir)):
+        if name.endswith(".jsonl"):
+            path = os.path.join(pdir, name)
+            with open(path, "rb") as fh:
+                out.append((path, sum(1 for _ in _records(fh))))
+    return out
 
 
 def _row(topic: str, partition: int, offset: int, rec: dict) -> tuple:
@@ -101,74 +106,74 @@ def _row(topic: str, partition: int, offset: int, rec: dict) -> tuple:
     return (key, value, topic, partition, offset, ts, 0)
 
 
-class _PartitionSlice(InputPartition):
-    def __init__(self, topic: str, partition: int, pdir: str, start: int, end: int | None):
+class _Slice(InputPartition):
+    """Offsets ``[start, end)`` of one topic partition, with the log files
+    they overlap as ``(path, offset of the file's first record)``."""
+
+    def __init__(self, topic: str, partition: int, start: int, end: int, files: list[tuple[str, int]]):
         self.topic = topic
         self.partition = partition
-        self.pdir = pdir
         self.start = start
         self.end = end
+        self.files = files
 
 
-class _BrokerReader(DataSourceReader):
+class _SliceReader(DataSourceStreamReader):
+    """The one read path: a stream reader whose offsets are per-(topic,
+    partition) record counts; a batch scan reads its earliest-to-latest
+    slice through _BatchReader."""
+
     def __init__(self, options: dict):
         self.root = _log_dir(options)
         subscribe = options.get("subscribe")
         self.topics = [t.strip() for t in subscribe.split(",")] if subscribe else None
-
-    def partitions(self) -> list[InputPartition]:
-        parts = [_PartitionSlice(t, p, d, 0, None) for t, p, d in _partition_dirs(self.root, self.topics)]
-        return parts or [_PartitionSlice("", -1, "", 0, 0)]  # empty scan
-
-    def read(self, part: _PartitionSlice) -> Iterator[tuple]:
-        if part.partition < 0:
-            return
-        for offset, rec in enumerate(_read_partition(part.pdir)):
-            if offset >= part.start and (part.end is None or offset < part.end):
-                yield _row(part.topic, part.partition, offset, rec)
-
-
-class _BrokerStreamReader(DataSourceStreamReader):
-    def __init__(self, options: dict):
-        self.root = _log_dir(options)
-        subscribe = options.get("subscribe")
-        self.topics = [t.strip() for t in subscribe.split(",")] if subscribe else None
-
-    def _counts(self) -> dict[str, int]:
-        return {
-            f"{t}/{p}": len(_read_partition(d))
-            for t, p, d in _partition_dirs(self.root, self.topics)
-        }
 
     def initialOffset(self) -> dict:
         # earliest: every known partition starts at 0
-        return {k: 0 for k in self._counts()}
+        return {f"{t}/{p}": 0 for t, p, _ in _partition_dirs(self.root, self.topics)}
 
     def latestOffset(self) -> dict:
-        return self._counts()
+        return {
+            f"{t}/{p}": sum(n for _, n in _log_files(d))
+            for t, p, d in _partition_dirs(self.root, self.topics)
+        }
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
         out = []
         for key, hi in end.items():
             lo = start.get(key, 0)
-            if hi > lo:
-                topic, p = key.rsplit("/", 1)
-                pdir = os.path.join(self.root, topic, f"p{p}")
-                out.append(_PartitionSlice(topic, int(p), pdir, lo, hi))
-        return out or [_PartitionSlice("", -1, "", 0, 0)]
+            if hi <= lo:
+                continue
+            topic, p = key.rsplit("/", 1)
+            files, first = [], 0
+            for path, n in _log_files(os.path.join(self.root, topic, f"p{p}")):
+                if first < hi and first + n > lo:
+                    files.append((path, first))
+                first += n
+            out.append(_Slice(topic, int(p), lo, hi, files))
+        return out or [_Slice("", 0, 0, 0, [])]  # a scan needs at least one partition
 
-    def read(self, part: _PartitionSlice) -> Iterator[tuple]:
-        if part.partition < 0:
-            return
-        for offset, rec in enumerate(_read_partition(part.pdir)):
-            if part.start <= offset and (part.end is None or offset < part.end):
-                yield _row(part.topic, part.partition, offset, rec)
+    def read(self, part: _Slice) -> Iterator[tuple]:
+        for path, first in part.files:
+            with open(path, "rb") as fh:
+                for offset, line in enumerate(_records(fh), first):
+                    if offset >= part.end:
+                        return
+                    if offset >= part.start:
+                        yield _row(part.topic, part.partition, offset, json.loads(line))
 
-    def commit(self, end: dict) -> None:
-        pass  # the log is append-only; nothing to release
 
-    def stop(self) -> None:
-        pass
+class _BatchReader(DataSourceReader):
+    """A batch scan is the stream's slice from earliest to latest."""
+
+    def __init__(self, options: dict):
+        self.slices = _SliceReader(options)
+
+    def partitions(self) -> list[InputPartition]:
+        return self.slices.partitions(self.slices.initialOffset(), self.slices.latestOffset())
+
+    def read(self, part: _Slice) -> Iterator[tuple]:
+        return self.slices.read(part)
 
 
 class _BrokerCommit(WriterCommitMessage):
@@ -179,7 +184,7 @@ class _BrokerWriter(DataSourceWriter):
     def __init__(self, options: dict, schema: StructType):
         self.root = _log_dir(options)
         self.fixed_topic = options.get("topic")
-        self.n_partitions = int(options.get("numPartitions", options.get("numpartitions", 1)))
+        self.n_partitions = int(options.get("numPartitions", 1))
         self.fields = [f.name for f in schema.fields]
         if "value" not in self.fields:
             raise ValueError("kafka write requires a 'value' column")
@@ -208,13 +213,17 @@ class _BrokerWriter(DataSourceWriter):
                 "ts": int(time.time() * 1000),
             }
             by_dest.setdefault((topic, self._partition_for(key)), []).append(json.dumps(rec))
-        # one file per (topic, partition) per task — files are the commit unit
-        name = f"{time.time_ns():020d}-{uuid.uuid4().hex}.jsonl"
+        # one file per (topic, partition) per task — files are the commit
+        # unit, written under a temporary name and renamed into place so a
+        # reader never sees a partial file
+        name = f"{time.time_ns():020d}-{uuid.uuid4().hex}"
         for (topic, part), lines in by_dest.items():
             pdir = os.path.join(self.root, topic, f"p{part}")
             os.makedirs(pdir, exist_ok=True)
-            with open(os.path.join(pdir, name), "w", encoding="utf-8") as fh:
+            tmp = os.path.join(pdir, f".{name}.tmp")
+            with open(tmp, "w", encoding="utf-8") as fh:
                 fh.write("\n".join(lines) + "\n")
+            os.replace(tmp, os.path.join(pdir, f"{name}.jsonl"))
         return _BrokerCommit()
 
 
@@ -235,10 +244,10 @@ class EmbeddedKafkaDataSource(DataSource):
         return KAFKA_SCHEMA
 
     def reader(self, schema: StructType) -> DataSourceReader:
-        return _BrokerReader(self.options)
+        return _BatchReader(self.options)
 
     def streamReader(self, schema: StructType) -> DataSourceStreamReader:
-        return _BrokerStreamReader(self.options)
+        return _SliceReader(self.options)
 
     def writer(self, schema: StructType, overwrite: bool) -> DataSourceWriter:
         return _BrokerWriter(self.options, schema)

@@ -4,6 +4,9 @@ kafkaProducer publish, KafkaDataProducerCommandBuilder.java:260-331).
 
 Spark's kafka connector (spark-sql-kafka) is a separate jar not bundled with
 the pip distribution; every function degrades to a clear error when absent.
+This is the one module that knows how a frame reaches Kafka: kafkaProducer
+{transport: kafka} publishes through write_kafka_batch, and without the jar
+sources.embedded_broker stands in behind the same calls.
 The envelope rename makes the kafka frame identical to the engine's canonical
 record schema (record.py), so compiled pipelines run unchanged on either.
 """
@@ -33,42 +36,26 @@ def _try(fn):
     try:
         return fn()
     except Exception as e:  # AnalysisException: Failed to find data source: kafka
-        if "kafka" in str(e).lower() or "data source" in str(e).lower():
+        if "Failed to find data source: kafka" in str(e):
             raise KafkaUnavailableError() from e
         raise
 
 
+def _load(source, bootstrap: str, topics: str, options: dict[str, str]) -> DataFrame:
+    """One reader for both faces: ``spark.read`` or ``spark.readStream``,
+    subscribed to ``topics``, renamed to the canonical envelope."""
+    opts = {"kafka.bootstrap.servers": bootstrap, "subscribe": topics, **options}
+    return _try(lambda: R.from_kafka_source(source.format(KAFKA_FORMAT).options(**opts).load()))
+
+
 def read_kafka_batch(spark: SparkSession, bootstrap: str, topics: str, options: dict[str, str] | None = None) -> DataFrame:
     """Batch-read a topic range into the canonical envelope frame."""
-
-    def go():
-        reader = (
-            spark.read.format(KAFKA_FORMAT)
-            .option("kafka.bootstrap.servers", bootstrap)
-            .option("subscribe", topics)
-            .option("startingOffsets", "earliest")
-        )
-        for k, v in (options or {}).items():
-            reader = reader.option(k, v)
-        return R.from_kafka_source(reader.load())
-
-    return _try(go)
+    return _load(spark.read, bootstrap, topics, {"startingOffsets": "earliest", **(options or {})})
 
 
 def read_kafka_stream(spark: SparkSession, bootstrap: str, topics: str, options: dict[str, str] | None = None) -> DataFrame:
     """Streaming-read (the sink-connector input path, MorphlineSinkTask put loop)."""
-
-    def go():
-        reader = (
-            spark.readStream.format(KAFKA_FORMAT)
-            .option("kafka.bootstrap.servers", bootstrap)
-            .option("subscribe", topics)
-        )
-        for k, v in (options or {}).items():
-            reader = reader.option(k, v)
-        return R.from_kafka_source(reader.load())
-
-    return _try(go)
+    return _load(spark.readStream, bootstrap, topics, options or {})
 
 
 def write_kafka_batch(df: DataFrame, bootstrap: str, topic: str | None = None, options: dict[str, str] | None = None) -> None:
@@ -77,69 +64,7 @@ def write_kafka_batch(df: DataFrame, bootstrap: str, topic: str | None = None, o
     Per-record topic comes from a ``topic`` column when no fixed topic is
     given, matching the reference's topic/topicField pair (ref :129-134).
     """
-
-    def go():
-        # append is the kafka publish semantic (and the only save mode the
-        # Python-DataSource-backed embedded broker accepts)
-        writer = df.write.format(KAFKA_FORMAT).mode("append").option("kafka.bootstrap.servers", bootstrap)
-        if topic:
-            writer = writer.option("topic", topic)
-        for k, v in (options or {}).items():
-            writer = writer.option(k, v)
-        writer.save()
-
-    return _try(go)
-
-
-def read_topic_files(
-    spark: SparkSession,
-    path: str,
-    topic: str | None = None,
-    streaming: bool = False,
-) -> DataFrame:
-    """Consume a ``kafkaProducer {transport: files}`` directory back into the
-    canonical envelope frame — the jar-less produce->consume loop.
-
-    The files transport persists (key?, value, topic?) JSON rows; this reads
-    them (batch or as a file stream for micro-batch consumption), filters to
-    ``topic`` when given, and rebuilds the envelope: ``_kafkaOffset`` is a
-    per-file monotonic id (files are the commit unit, like segment files),
-    ``_kafkaPartition`` 0, ``_timestamp`` the ingestion clock.  On a real
-    cluster the same pipeline swaps this for read_kafka_batch/stream — the
-    envelope is identical, which is the point.
-    """
-    import json as _json
-    import os as _os
-
-    from pyspark.sql import functions as F, types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("key", T.StringType()),
-            T.StructField("value", T.StringType()),
-            T.StructField("topic", T.StringType()),
-        ]
-    )
-    if streaming:
-        df = spark.readStream.schema(schema).json(path)
-    else:
-        df = spark.read.schema(schema).json(path)
-    if topic is not None:
-        df = df.filter(F.col("topic") == topic)
-    # streaming plans reject monotonically_increasing_id; there the offset is
-    # a per-file id derived from the source file path (files are the commit
-    # unit here), so the envelope carries the same column in both modes and a
-    # pipeline referencing _kafkaOffset runs unchanged as a stream.
-    offset = (
-        F.monotonically_increasing_id()
-        if not streaming
-        else F.abs(F.xxhash64(F.col("_metadata.file_path")))
-    )
-    return df.select(
-        F.coalesce(F.col("topic"), F.lit("files")).alias(R.TOPIC),
-        F.lit(0).alias(R.PARTITION),
-        F.col("key").alias(R.KEY),
-        F.col("value").alias(R.VALUE),
-        (F.unix_timestamp(F.current_timestamp()) * 1000).alias(R.TIMESTAMP),
-        offset.alias(R.OFFSET),
-    )
+    opts = {"kafka.bootstrap.servers": bootstrap, **({"topic": topic} if topic else {}), **(options or {})}
+    # append is the kafka publish semantic (and the only save mode the
+    # Python-DataSource-backed embedded broker accepts)
+    _try(lambda: df.write.format(KAFKA_FORMAT).mode("append").options(**opts).save())

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from kafka_connect_morphlines_spark import compile_pipeline
 from kafka_connect_morphlines_spark.commands.sinks import LOAD_CLIENTS, MEMORY_SINKS
+from kafka_connect_morphlines_spark.pipeline import PipelineSpecError
 
 
 def run(spark, commands, rows, schema):
@@ -222,17 +223,34 @@ def test_pandas_batch_command(spark):
     assert sorted((r["x"], r["double"]) for r in out.collect()) == [(5, 10), (6, 12)]
 
 
-def test_kafka_producer_files_transport(spark, tmp_path):
-    out_dir = str(tmp_path / "kafka_out")
-    p = compile_pipeline(
-        [{"kafkaProducer": {"transport": "files", "path": out_dir, "topic": "t1", "valueField": "v", "format": "json"}}]
-    )
-    df = spark.createDataFrame([("a",), ("b",)], "v string")
-    result = p(df)  # pass-through publisher
-    assert result.count() == 2
-    written = spark.read.json(out_dir)
-    assert sorted(r["value"] for r in written.collect()) == ["a", "b"]
-    assert written.select("topic").distinct().collect()[0]["topic"] == "t1"
+def test_kafka_producer_kafka_transport(spark, tmp_path):
+    """kafkaProducer publishes (value, topic) through sources.kafka and
+    passes the frame through; the embedded broker stands in for the jar."""
+    from kafka_connect_morphlines_spark.sources import embedded_broker
+    from kafka_connect_morphlines_spark.sources.kafka import read_kafka_batch
+
+    broker = str(tmp_path / "broker")
+    embedded_broker.install(spark)
+    try:
+        p = compile_pipeline(
+            [{"kafkaProducer": {"topic": "t1", "valueField": "v", "format": "json", "properties": {"bootstrap-servers": broker}}}]
+        )
+        df = spark.createDataFrame([("a",), ("b",)], "v string")
+        result = p(df)  # pass-through publisher
+        assert result.count() == 2
+        written = read_kafka_batch(spark, broker, "t1").collect()
+    finally:
+        embedded_broker.uninstall()
+    assert sorted(bytes(r["_value"]).decode() for r in written) == ["a", "b"]
+    assert {r["_topic"] for r in written} == {"t1"}
+
+
+def test_kafka_producer_files_transport_is_unknown(spark):
+    """The old jar-less ``files`` transport is gone: it is an unknown
+    transport like any other name."""
+    p = compile_pipeline([{"kafkaProducer": {"transport": "files", "path": "/nonexistent", "topic": "t1"}}])
+    with pytest.raises(PipelineSpecError, match="unknown transport"):
+        p(spark.createDataFrame([("a",)], "_value string"))
 
 
 def test_load_solr_mock_client(spark):

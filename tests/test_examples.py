@@ -73,17 +73,24 @@ def test_heterogeneous_topic_branching(spark, tmp_path):
 
 
 def test_producer_like_pipeline(spark, tmp_path, monkeypatch):
-    out_dir = str(tmp_path / "produced")
-    monkeypatch.setenv("PRODUCER_OUT_DIR", out_dir)
+    from kafka_connect_morphlines_spark.sources import embedded_broker
+    from kafka_connect_morphlines_spark.sources.kafka import read_kafka_batch
+
+    broker = str(tmp_path / "produced")
+    monkeypatch.setenv("PRODUCER_OUT_DIR", broker)
     pipe = Pipeline.from_file(os.path.join(EXAMPLES, "producer_like.conf"), morphline_id="republish")
     events = load_table(spark, "/root/testdata/sf0.001", "events").limit(20)
-    result = pipe(events)
-    assert result.count() == 20  # pass-through publisher
-    written = spark.read.json(out_dir)
-    assert written.count() == 20
-    row = written.collect()[0]
-    assert row["topic"].startswith("enriched-")
-    payload = json.loads(row["value"])
+    embedded_broker.install(spark)
+    try:
+        result = pipe(events)
+        assert result.count() == 20  # pass-through publisher
+        written = read_kafka_batch(spark, broker, ",".join(os.listdir(broker))).collect()
+    finally:
+        embedded_broker.uninstall()
+    assert len(written) == 20
+    row = written[0]
+    assert row["_topic"].startswith("enriched-")
+    payload = json.loads(bytes(row["_value"]))
     assert set(payload) >= {"event_id", "uid", "user_id"}
 
 
@@ -138,33 +145,39 @@ def test_session_window_stream(spark, tmp_path):
 
 
 def test_streaming_dlq_example(spark, tmp_path):
-    """The full jar-less loop: kafkaProducer files transport -> streaming
-    consume (read_topic_files) -> examples/streaming_dlq.conf pipeline ->
+    """The full jar-less loop: kafkaProducer -> embedded broker -> streaming
+    consume (read_kafka_stream) -> examples/streaming_dlq.conf pipeline ->
     good rows to the sink, bad payloads to the quarantine DLQ."""
+    from pyspark.sql import functions as F
+
     from kafka_connect_morphlines_spark import compile_pipeline
-    from kafka_connect_morphlines_spark.sources.kafka import read_topic_files
+    from kafka_connect_morphlines_spark.sources import embedded_broker
+    from kafka_connect_morphlines_spark.sources.kafka import read_kafka_stream
     from kafka_connect_morphlines_spark.streaming import runner
 
-    topic_dir = str(tmp_path / "topic")
+    broker = str(tmp_path / "broker")
     # produce: two valid JSON payloads and one broken one
     src = spark.createDataFrame(
         [('{"name":"a","n":1}',), ('{"name":"b","n":2}',), ("broken",)], "_value string"
     )
-    produce = compile_pipeline([{"kafkaProducer": {"transport": "files", "path": topic_dir, "topic": "demo"}}])
-    produce(src).count()
-
+    produce = compile_pipeline([{"kafkaProducer": {"topic": "demo", "properties": {"bootstrap-servers": broker}}}])
     pipe = Pipeline.from_file(os.path.join(EXAMPLES, "streaming_dlq.conf"), morphline_id="consume_clean")
     good, bad = [], []
-    stream = read_topic_files(spark, topic_dir, topic="demo", streaming=True)
-    q = runner.run_stream(
-        stream,
-        pipe,
-        sink=lambda df, epoch: good.extend(r["doc_key"] for r in df.collect()),
-        quarantine_sink=lambda df, epoch: bad.extend(r["_value"] for r in df.collect()),
-        checkpoint=str(tmp_path / "ck"),
-    )
-    q.processAllAvailable()
-    q.stop()
+    embedded_broker.install(spark)
+    try:
+        produce(src).count()
+        stream = read_kafka_stream(spark, broker, "demo").withColumn("_value", F.col("_value").cast("string"))
+        q = runner.run_stream(
+            stream,
+            pipe,
+            sink=lambda df, epoch: good.extend(r["doc_key"] for r in df.collect()),
+            quarantine_sink=lambda df, epoch: bad.extend(r["_value"] for r in df.collect()),
+            checkpoint=str(tmp_path / "ck"),
+        )
+        q.processAllAvailable()
+        q.stop()
+    finally:
+        embedded_broker.uninstall()
     assert sorted(good) == ["demo-1", "demo-2"]
     assert bad == ["broken"]
 

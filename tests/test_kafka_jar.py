@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import pytest
 
-from kafka_connect_morphlines_spark import record as R
+from kafka_connect_morphlines_spark import compile_pipeline, record as R
 from kafka_connect_morphlines_spark.sources import kafka as K
 
 
@@ -54,6 +54,15 @@ def test_jarless_paths_raise_kafka_unavailable(spark):
         K.read_kafka_batch(spark, "localhost:1", "t")
     with pytest.raises(K.KafkaUnavailableError):
         K.read_kafka_stream(spark, "localhost:1", "t")
+    frame = spark.createDataFrame([("v",)], "value string")
+    with pytest.raises(K.KafkaUnavailableError):
+        K.write_kafka_batch(frame, "localhost:1", "t")
+    # kafkaProducer {transport: kafka} publishes through write_kafka_batch
+    producer = compile_pipeline(
+        [{"kafkaProducer": {"transport": "kafka", "topic": "t", "valueField": "value", "properties": {"bootstrap-servers": "localhost:1"}}}]
+    )
+    with pytest.raises(K.KafkaUnavailableError):
+        producer(frame)
 
 
 @pytest.mark.kafka_jar

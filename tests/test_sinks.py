@@ -119,58 +119,41 @@ def test_load_solr_drops_reserved_fields(spark):
     assert MEMORY_SINKS["solr"] == [{"field": "keep"}]
 
 
-def test_kafka_files_transport_roundtrip(spark, tmp_path):
-    """kafkaProducer {transport: files} -> read_topic_files: the jar-less
-    produce/consume loop preserves values and per-record topics, and the
-    consumed frame is a canonical envelope a pipeline can process."""
-    from kafka_connect_morphlines_spark import compile_pipeline
-    from kafka_connect_morphlines_spark.sources.kafka import read_topic_files
+def test_kafka_producer_broker_roundtrip(spark, tmp_path):
+    """kafkaProducer {transport: kafka} -> read_kafka_batch over the
+    embedded broker: the jar-less produce/consume loop preserves values and
+    per-record topics, gives distinct offsets, and the consumed frame is a
+    canonical envelope a pipeline can process."""
+    from pyspark.sql import functions as F
 
-    out_dir = str(tmp_path / "topic_files")
+    from kafka_connect_morphlines_spark import compile_pipeline
+    from kafka_connect_morphlines_spark.sources import embedded_broker
+    from kafka_connect_morphlines_spark.sources.kafka import read_kafka_batch
+
+    broker = str(tmp_path / "broker")
     df = spark.createDataFrame(
         [("a", 1, "t1"), ("b", 2, "t2"), ("c", 3, "t1")], "name string, n int, dest string"
     )
     produce = compile_pipeline(
         [
             {"sqlExpr": {"_value": "struct(name, n)"}},
-            {"kafkaProducer": {"transport": "files", "path": out_dir, "topicField": "dest"}},
+            {"kafkaProducer": {"topicField": "dest", "properties": {"bootstrap-servers": broker}}},
         ]
     )
-    produce(df).count()  # executes the pass-through publish
-
-    env = read_topic_files(spark, out_dir, topic="t1")
-    consume = compile_pipeline([{"readJson": {"inputField": "_value", "schemaDdl": "name string, n int"}}])
-    rows = sorted((r["name"], r["n"]) for r in consume(env).select("_json.name", "_json.n").collect())
+    embedded_broker.install(spark)
+    try:
+        produce(df).count()  # executes the pass-through publish
+        env = read_kafka_batch(spark, broker, "t1").withColumn("_value", F.col("_value").cast("string"))
+        consume = compile_pipeline([{"readJson": {"inputField": "_value", "schemaDdl": "name string, n int"}}])
+        rows = sorted((r["name"], r["n"]) for r in consume(env).select("_json.name", "_json.n").collect())
+        envelopes = env.collect()
+        assert read_kafka_batch(spark, broker, "t2").count() == 1
+    finally:
+        embedded_broker.uninstall()
     assert rows == [("a", 1), ("c", 3)]
-    offsets = [r["_kafkaOffset"] for r in env.collect()]
+    assert {r["_topic"] for r in envelopes} == {"t1"}
+    offsets = [(r["_kafkaPartition"], r["_kafkaOffset"]) for r in envelopes]
     assert len(set(offsets)) == len(offsets)  # distinct offsets
-
-
-def test_kafka_files_streaming_envelope_has_offset(spark, tmp_path):
-    """The streaming consume face carries _kafkaOffset too (per-file id —
-    files are the commit unit), so a pipeline referencing it runs unchanged
-    in batch and stream modes."""
-    from kafka_connect_morphlines_spark import compile_pipeline
-    from kafka_connect_morphlines_spark.sources.kafka import read_topic_files
-
-    topic_dir = str(tmp_path / "topic")
-    df = spark.createDataFrame([('{"n":1}',), ('{"n":2}',)], "_value string")
-    produce = compile_pipeline([{"kafkaProducer": {"transport": "files", "path": topic_dir, "topic": "demo"}}])
-    produce(df).count()
-
-    stream = read_topic_files(spark, topic_dir, topic="demo", streaming=True)
-    batch = read_topic_files(spark, topic_dir, topic="demo")
-    assert stream.columns == batch.columns  # identical envelope
-    seen = []
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(lambda b, e: seen.extend(r["_kafkaOffset"] for r in b.collect()))
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    assert len(seen) == 2 and all(o is not None and o >= 0 for o in seen)
 
 
 def test_kafka_producer_rest_transport_plain_string_value(spark):
