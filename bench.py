@@ -1,9 +1,16 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS].  Prints ONE JSON line:
+"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
+/root/testdata/sf0.1).  Prints the full JSON metric line, then a compact
+one that fits a 2000-char stdout tail:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {name: sec}, "sf": sf}
+and persists the full line to $SPARK_GRAFT_BENCH_DETAIL (default
+BENCH_DETAIL.json next to this script).
 
-Each query executes its full plan via the noop writer (no driver-side
-collect skewing the measurement).
+This module owns the query-timing session and loop that the tools/
+scripts import: ``start_session`` sizes the session from the host through
+``get_spark`` (local[$SPARK_GRAFT_CPUS or all cores], driver heap 40% of
+RAM unless $SPARK_DRIVER_MEMORY is set; no fixed or pre-touched heap) and
+warms it; ``time_runs`` executes a plan through the noop writer and
+returns each run's seconds.
 """
 
 from __future__ import annotations
@@ -13,11 +20,16 @@ import os
 import re
 import sys
 import time
+from collections.abc import Callable
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import DataFrame, SparkSession  # noqa: E402
+
 from kafka_connect_morphlines_spark import get_spark  # noqa: E402
 from kafka_connect_morphlines_spark.plans.queries import QUERIES  # noqa: E402
+from kafka_connect_morphlines_spark.sources.files import load_table  # noqa: E402
 
 HEADLINE = [
     # morphline pipeline path
@@ -165,49 +177,44 @@ HEADLINE = [
 ]
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
-
-    # Heap pre-touch (r10): the measurement host intermittently throttles
-    # fresh anonymous page faults to ~500-1000us each (tools/host_probe.py;
-    # normal ~1us) — a JVM that grows/shrinks its heap lazily then spends
-    # 90% of its CPU in the kernel and the bench measures the hypervisor,
-    # not the engine (observed: 158s warmup, first query >25 min, JVM
-    # stime:utime 10:1).  A committed-and-pre-touched heap floor faults its
-    # pages ONCE, in parallel, at session init (untimed) and never returns
-    # them, so per-query numbers stay page-fault-free.  -Xmx is unchanged
-    # (SPARK_DRIVER_MEMORY, default 40% of physical memory): above the floor the heap can
-    # still grow, and AlwaysPreTouch covers those commits too.  Floor size
-    # is env-tunable; empty SPARK_GRAFT_XMS disables the whole thing.
-    # Default is a FIXED heap (Xmx pinned to the same size unless the
-    # caller set SPARK_DRIVER_MEMORY): a large lazy Xmx lets G1's
-    # ergonomic expand/shrink above the floor re-enter the throttled
-    # fault path mid-bench (observed as a creeping stime:utime ratio and
-    # ~1.8x-inflated readings in the second half of a full run).  24g is
-    # ~2.5x the live-set high-water observed across the full corpus.
-    xms = os.environ.get("SPARK_GRAFT_XMS", "24g")
-    if xms:
-        os.environ.setdefault("SPARK_DRIVER_MEMORY", xms)
-    extra = (
-        {"spark.driver.extraJavaOptions": f"-Xms{xms} -XX:+AlwaysPreTouch"} if xms else {}
-    )
+def start_session(
+    sf_dir: str, app_name: str = "bench", extra_conf: dict[str, str] | None = None
+) -> SparkSession:
+    """The query-timing session: get_spark's host-derived sizing
+    (local[$SPARK_GRAFT_CPUS or all cores], matching shuffle partitions,
+    driver heap 40% of RAM or $SPARK_DRIVER_MEMORY) plus warmers for the
+    JVM/codegen, parquet, JSON and Python/Arrow paths, so a query's cold
+    run measures its own compile, not one-time session init (the first
+    Arrow batch alone is ~2-3s of worker-pool spawn)."""
     spark = get_spark(
-        app_name="bench", master=f"local[{cpus}]", shuffle_partitions=int(cpus), extra_conf=extra
+        app_name=app_name,
+        extra_conf={"spark.ui.showConsoleProgress": "false", **(extra_conf or {})},
     )
-    # warm the JVM/codegen/parquet/json paths so per-query numbers measure the
-    # plan, not one-time initialization
     spark.range(1000).selectExpr("sum(id)").collect()
-    from kafka_connect_morphlines_spark.sources.files import load_table
-
     load_table(spark, sf_dir, "region").selectExpr("count(*)").collect()
     spark.sql("SELECT from_json('{\"a\":1}', 'a int')").collect()
-    # warm the Python/Arrow runner too (worker-pool spawn + first Arrow
-    # batch is ~2-3s of session init that would otherwise be billed to
-    # whichever pandas-UDF query happens to run first)
     spark.range(100).mapInPandas(lambda it: it, "id long").collect()
+    return spark
+
+
+def time_runs(build: Callable[[], DataFrame], runs: int) -> list[float]:
+    """Execute ``build()``'s full plan ``runs`` times through the noop
+    writer (no driver-side collect skewing the reading) and return each
+    run's wall seconds.  The first run of a plan shape in a session is its
+    cold run (whole-stage codegen + JIT); the rest are warm."""
+    secs = []
+    for _ in range(runs):
+        t0 = time.time()
+        build().write.format("noop").mode("overwrite").save()
+        secs.append(time.time() - t0)
+    return secs
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else -1.0
+    spark = start_session(sf_dir)
 
     # JIT warmup pass (r10, VERDICT r09 #7): the r09 cold total was 2.2x
     # the warm total, attributed to C2-compiler starvation — the first
@@ -215,40 +222,36 @@ def main() -> None:
     # parquet reader, janino itself), not just their own codegen.  Run a
     # codegen-diverse subset once at the smallest sibling SF (untimed,
     # best-effort) so the per-query cold numbers measure PLAN compile
-    # cost, not who-ran-first.  Disable with SPARK_GRAFT_WARMUP=0.
-    warmup_sec = 0.0
-    if os.environ.get("SPARK_GRAFT_WARMUP", "1") != "0":
-        small = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-        wdir = small if os.path.isdir(small) else sf_dir
-        t0 = time.time()
-        for wname in (
-            "agg_pricing_summary",     # decimal hash agg
-            "join_revenue_by_nation",  # broadcast + shuffle joins
-            "window_topk_orders",      # WindowExec + sort
-            "grok_extract",            # regex codegen
-            "dedup_minhash_lsh",       # xxhash explode + self-join
-            "embedding_cosine_topk",   # higher-order array functions
-            "pivot_event_counts",      # expand + pivot agg
-            "trend_daily_revenue_fast",  # sort_array aggregates
-        ):
-            try:
-                QUERIES[wname].build(spark, wdir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception:  # noqa: BLE001 - warmup is best-effort
-                pass
-        warmup_sec = round(time.time() - t0, 3)
-        print(f"# warmup: {warmup_sec}s at {wdir}", file=sys.stderr)
+    # cost, not who-ran-first.
+    small = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    wdir = small if os.path.isdir(small) else sf_dir
+    t0 = time.time()
+    for wname in (
+        "agg_pricing_summary",     # decimal hash agg
+        "join_revenue_by_nation",  # broadcast + shuffle joins
+        "window_topk_orders",      # WindowExec + sort
+        "grok_extract",            # regex codegen
+        "dedup_minhash_lsh",       # xxhash explode + self-join
+        "embedding_cosine_topk",   # higher-order array functions
+        "pivot_event_counts",      # expand + pivot agg
+        "trend_daily_revenue_fast",  # sort_array aggregates
+    ):
+        try:
+            time_runs(partial(QUERIES[wname].build, spark, wdir), 1)
+        except Exception:  # noqa: BLE001 - warmup is best-effort
+            pass
+    warmup_sec = round(time.time() - t0, 3)
+    print(f"# warmup: {warmup_sec}s at {wdir}", file=sys.stderr)
 
     # Four passes per query: the first pays one-time whole-stage-codegen/JIT
     # compilation (measured on this host at 20-40s under contention vs ~1s
     # steady-state); the reported number is the MIN of the three warm
     # executions (best-of-N, SCALE.md lesson 5) — the throughput a pipeline
-    # actually sustains.  This host
-    # shows +/-2-10x timing noise under contention (single warm samples have
-    # ranged 2.9s-17s for the same plan), so min-of-2 is the honest
-    # steady-state estimator.  Cold times are reported per query too, so
-    # codegen-compile regressions stay visible round over round.
+    # actually sustains.  This host shows +/-2-10x timing noise under
+    # contention (single warm samples have ranged 2.9s-17s for the same
+    # plan), so the min is the honest steady-state estimator.  Cold times
+    # are reported per query too, so codegen-compile regressions stay
+    # visible round over round.
     # One failing query must not zero the whole bench: each query is wrapped;
     # failures land in "errors" as the final exception line and the rest of
     # the file stays valid.
@@ -273,14 +276,6 @@ def main() -> None:
         except (ValueError, OSError) as exc:
             print(f"bench: ignoring unreadable {floors_path}: {exc}", file=sys.stderr)
 
-    def best_of_3(spec) -> float:
-        warms = []
-        for _ in range(3):
-            t0 = time.time()
-            spec.build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            warms.append(time.time() - t0)
-        return min(warms)
-
     # Global rerun budget: under a SUSTAINED burst every query could trip
     # the 2x-floor check, and 3 extra best-of-3 rounds x 100+ queries
     # would multiply the bench wall-time ~4x.  30 rerun rounds total
@@ -296,13 +291,12 @@ def main() -> None:
     over_floor: list[str] = []
     errors: dict[str, str] = {}
     for name in HEADLINE:
-        spec = QUERIES[name]
+        build = partial(QUERIES[name].build, spark, sf_dir)
         try:
             load1[name] = round(os.getloadavg()[0], 1)
-            t0 = time.time()
-            spec.build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            cold[name] = round(time.time() - t0, 3)
-            best = best_of_3(spec)
+            first_run, *warms = time_runs(build, 4)
+            cold[name] = round(first_run, 3)
+            best = min(warms)
             floor = floors.get(name)
             if floor is not None and best > 2 * floor and rerun_budget > 0:
                 first = best
@@ -312,7 +306,7 @@ def main() -> None:
                         break
                     rerun_budget -= 1
                     n_extra += 1
-                    best = min(best, best_of_3(spec))
+                    best = min(best, *time_runs(build, 3))
                     if best <= 2 * floor:
                         break
                 reruns[name] = {

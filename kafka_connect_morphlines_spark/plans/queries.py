@@ -4334,9 +4334,17 @@ def pagerank_trade_graph(spark, sf_dir):
 
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     l = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    # Supplier node ids are 1,000,000 + suppkey, so customer ids must stay
+    # below the offset (TPC-H custkeys reach it near SF 7).  The guard
+    # raises inside the same projection — no extra action — instead of
+    # letting the two id spaces merge silently.
+    custkey = F.when(
+        F.col("o_custkey") >= 1000000,
+        F.raise_error(F.lit("pagerank_trade_graph: o_custkey >= 1000000 collides with supplier node ids")),
+    ).otherwise(F.col("o_custkey"))
     pairs = (
         o.join(l, o.o_orderkey == l.l_orderkey)
-        .select(F.col("o_custkey").alias("c"), (F.lit(1000000) + F.col("l_suppkey")).alias("s"))
+        .select(custkey.alias("c"), (F.lit(1000000) + F.col("l_suppkey")).alias("s"))
         .distinct()
     )
     # r11 (guide §1.2, §2.4): pairs feeds BOTH union branches — without a
@@ -4345,8 +4353,9 @@ def pagerank_trade_graph(spark, sf_dir):
     # The outer .distinct() was a no-op costing a full extra shuffle:
     # pairs is already distinct and the two directions are disjoint by
     # construction (src < 1e6 <= dst in one branch, src >= 1e6 > dst in
-    # the other — supplier ids are offset by 1,000,000), so the union
-    # carries no duplicates.  Edge set identical; oracle unchanged.
+    # the other — the guard above keeps custkeys below the supplier
+    # offset), so the union carries no duplicates.  Edge set identical;
+    # oracle unchanged.
     pairs = pairs.localCheckpoint()
     edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
         pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))

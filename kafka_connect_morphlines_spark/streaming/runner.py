@@ -52,8 +52,12 @@ def run_stream(
 
     ``sink(df, epoch_id)`` receives each transformed micro-batch — the
     transactional boundary, mirroring the reference's per-put
-    begin/commit notifications (MorphlineSinkTask.java:132,148).  Exactly-once
-    is the sink's contract (idempotent write keyed on epoch_id + checkpoint).
+    begin/commit notifications (MorphlineSinkTask.java:132,148).  Delivery is
+    at-least-once: after a failure the checkpoint replays the epoch and
+    ``sink`` runs again with the same ``epoch_id``, so the output is
+    exactly-once only if the sink itself is idempotent per epoch.
+    ``write_kafka_batch`` is not (it takes no epoch key and a replay
+    publishes again); ROADMAP D3 tracks making the broker sink idempotent.
 
     ``constraints`` (validation.Constraint list) adds a per-batch quality
     gate AFTER the pipeline: a micro-batch that violates any constraint is

@@ -18,6 +18,8 @@
 import os
 
 import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from kafka_connect_morphlines_spark.plans.queries import QUERIES
@@ -62,11 +64,33 @@ def test_ssl_prototype_plan_carries_no_literal_centroid_tree(spark):
     frame, not a create_map of k*d literal columns.  The literal tree
     cost ~5s of driver-side wall per build (2048 py4j Column builds +
     Catalyst analysis) and printed as a 130KB formatted plan; the join
-    form prints ~5KB.  Pin the plan size so a literal-map regression
-    fails loudly."""
+    form prints ~5KB.  Pin the plan size and the absence of the
+    literal-map marker ``map(keys: [`` so a literal-map regression fails
+    loudly: the committed plans/r11/ssl_prototype_prune_before.txt
+    carries the marker 3 times, plans/r11/ssl_prototype_prune_after.txt
+    not at all."""
     plan = _formatted_plan(spark, "ssl_prototype_prune")
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
     assert len(plan) < 40_000, f"plan ballooned to {len(plan)} chars"
+    assert "map(keys: [" not in plan, "a literal centroid map is back in the plan"
+
+
+def test_pagerank_rejects_custkey_at_supplier_offset(spark, tmp_path):
+    """pagerank_trade_graph numbers supplier nodes 1,000,000 + suppkey and
+    relies on the two id spaces being disjoint (its edge union has no
+    .distinct()).  A custkey at or past the offset (TPC-H SF >= ~7) would
+    merge a customer with a supplier node and duplicate edges silently;
+    the plan must raise instead."""
+    pq.write_table(
+        pa.table({"o_orderkey": pa.array([1, 2], pa.int64()), "o_custkey": pa.array([7, 1_000_005], pa.int64())}),
+        tmp_path / "orders.parquet",
+    )
+    pq.write_table(
+        pa.table({"l_orderkey": pa.array([1, 2], pa.int64()), "l_suppkey": pa.array([5, 5], pa.int64())}),
+        tmp_path / "lineitem.parquet",
+    )
+    with pytest.raises(Exception, match="collides with supplier node ids"):
+        QUERIES["pagerank_trade_graph"].build(spark, str(tmp_path)).collect()
 
 
 def _formatted_plan(spark, name: str) -> str:

@@ -10,6 +10,11 @@ Prints one line per job of the LAST (warm) execution, newest first:
     job_id  duration_ms  n_stages  description-or-callsite
 plus a summary: total job ms (cold/warm), job count, top stages by time.
 
+The session is bench.start_session (host-sized through get_spark, heap
+40% of RAM unless $SPARK_DRIVER_MEMORY is set) with the Spark UI enabled;
+each execution is one bench.time_runs run, with the UI's job list read
+between warm runs.
+
 Environment: $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 $SPARK_GRAFT_CPUS (default all).
 """
@@ -21,6 +26,7 @@ import os
 import sys
 import time
 import urllib.request
+from functools import partial
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -40,44 +46,20 @@ def main() -> None:
         del args[i : i + 2]
     name = args[0]
 
-    from kafka_connect_morphlines_spark import get_spark
+    from bench import start_session, time_runs
     from kafka_connect_morphlines_spark.plans.queries import QUERIES
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "8g")  # fixed heap == Xms
-    spark = get_spark(
-        app_name=f"profile-{name}",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        extra_conf={
-            "spark.ui.showConsoleProgress": "false",
-            "spark.ui.enabled": "true",
-            "spark.driver.extraJavaOptions": "-Xms8g -XX:+AlwaysPreTouch",
-        },
-    )
+    spark = start_session(sf_dir, app_name=f"profile-{name}", extra_conf={"spark.ui.enabled": "true"})
     sc = spark.sparkContext
-    # session warmers (match isolated_bench so cold is the query's compile)
-    spark.range(1000).selectExpr("sum(id)").collect()
-    from kafka_connect_morphlines_spark.sources.files import load_table
-
-    load_table(spark, sf_dir, "region").selectExpr("count(*)").collect()
-    spark.range(100).mapInPandas(lambda it: it, "id long").collect()
-
     base = sc.uiWebUrl + "/api/v1/applications/" + sc.applicationId
-    warm_start_job = None
-    spec = QUERIES[name]
+    build = partial(QUERIES[name].build, spark, sf_dir)
 
-    t0 = time.time()
-    spec.build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    cold = time.time() - t0
+    (cold,) = time_runs(build, 1)
     warms = []
-    for i in range(n_warms):
-        jobs_before = api(base, "/jobs")
-        warm_start_job = max((j["jobId"] for j in jobs_before), default=-1)
-        t0 = time.time()
-        spec.build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        warms.append(time.time() - t0)
+    for _ in range(n_warms):
+        warm_start_job = max((j["jobId"] for j in api(base, "/jobs")), default=-1)
+        warms += time_runs(build, 1)
     warm = min(warms)
 
     jobs = api(base, "/jobs")

@@ -4,7 +4,9 @@ scale-up on fixed memory (the local[32] stand-in for "would this hold at
 100 TB on a real cluster").
 
 Generates data with spark.range (no driver-side materialization), runs each
-operator twice, reports the warm run.  Usage:
+operator twice through bench.time_runs, reports the warm run.  The session
+is get_spark's host-sized default (local[$SPARK_GRAFT_CPUS or all cores],
+driver heap 40% of RAM unless $SPARK_DRIVER_MEMORY is set).  Usage:
 
     python tools/scale_smoke.py [rows_multiplier]
 """
@@ -14,12 +16,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import Window, functions as F  # noqa: E402
 
+from bench import time_runs  # noqa: E402
 from kafka_connect_morphlines_spark import compile_pipeline, get_spark  # noqa: E402
 from kafka_connect_morphlines_spark.functions import bloom, dedup, dsir, evalmetrics, funnel, multimodal, orderstats, pq, relational, retrieval, semantic, similarity, sketches, temporal, textclean, textstats, traindata, validation, web, winnow  # noqa: E402
 from kafka_connect_morphlines_spark.functions import timeseries as timeseries_mod  # noqa: E402
@@ -27,18 +29,7 @@ from kafka_connect_morphlines_spark.functions import timeseries as timeseries_mo
 
 def main() -> None:
     mult = int(sys.argv[1]) if len(sys.argv) > 1 else 1
-    # FIXED pre-touched heap, same rationale as bench.py/isolated_bench: a
-    # lazy Xmx lets G1's ergonomic expand/shrink re-enter the host's
-    # throttled page-fault path mid-run (observed here as a 351s reading of
-    # a leg that reads 5.6s quiet and 13.7s under plain CPU contention —
-    # kernel time, not compute).  24g matches bench.py's floor; empty
-    # SPARK_GRAFT_XMS disables.
-    xms = os.environ.get("SPARK_GRAFT_XMS", "24g")
-    extra = {"spark.ui.showConsoleProgress": "false"}
-    if xms:
-        os.environ.setdefault("SPARK_DRIVER_MEMORY", xms)
-        extra["spark.driver.extraJavaOptions"] = f"-Xms{xms} -XX:+AlwaysPreTouch"
-    spark = get_spark(app_name="scale_smoke", extra_conf=extra)
+    spark = get_spark(app_name="scale_smoke", extra_conf={"spark.ui.showConsoleProgress": "false"})
 
     n_events = 20_000_000 * mult
     n_docs = 200_000 * mult
@@ -91,11 +82,7 @@ def main() -> None:
     def run(name, make_df):
         if only and name not in only:
             return None
-        for attempt in range(2):
-            t0 = time.time()
-            df = make_df()
-            df.write.format("noop").mode("overwrite").save()
-            elapsed = time.time() - t0
+        elapsed = time_runs(make_df, 2)[-1]
         print(f"# {name}: {elapsed:.1f}s (warm)", file=sys.stderr)
         return round(elapsed, 2)
 
